@@ -214,7 +214,6 @@ EXTRA_QUERIES = [
     "customer_rfm_scores",
     "events_funnel_timing",
     # round 7
-    "dedup_transitive_closure",
     "dedup_closure_overflow",
     "cdc_avro_logical_scan",
     "cdc_avro_schema_census",

@@ -6,9 +6,12 @@ documents parquet from the shell.
       [--max-repetition 0.2] [--max-contamination 0.34] [--cpus 8]
 
 Writes the surviving documents (full rows) as parquet under --out and
-prints one JSON summary line.  The filters compose lazily exactly like
-the oracle-checked ``corpus_curation_pipeline`` query; see SCALE.md
-for the shuffle audit of each stage.
+prints one JSON summary line.  The filters compose exactly like the
+oracle-checked ``corpus_curation_pipeline`` query (one shared
+``curation_survivors``; see SCALE.md for the shuffle audit of each
+stage): lazily, except for the two materialized stage boundaries and
+the clustering rounds, which the whole run holds in one
+``cache_scope()`` and releases after the write.
 """
 
 from __future__ import annotations
@@ -16,6 +19,20 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+
+
+def _out_partitions(docs) -> int:
+    """Part files to write: one per ``spark.sql.files.maxPartitionBytes``
+    of input (the split size of Spark's own scan), at least one -- a
+    function of the input alone.  Left to the plan, the count is the
+    partitioning of the span trim's last join, which AQE settles at run
+    time: planned as a broadcast up front, it streams the 4-way spread
+    of the survivors; turned into one later, it reads the sort-merge
+    exchange's map output instead (1 partition here) -- so one input
+    came out as 1 or 4 files from run to run."""
+    size = int(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    split = docs.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, -(-size // split))
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
@@ -94,32 +111,35 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     try:
         from pyspark.sql import Observation, functions as F
 
-        # both counters ride the WRITE job itself (df.observe metrics
-        # resolve when the single action finishes): no persist, no
-        # second materialization of the pipeline, and the zero-survivor
-        # case needs no read-back guard because the count comes from
-        # the write, not from re-reading the output
+        from .functions.caching import cache_scope
+
+        # the counters need no persist and no read-back (so the
+        # zero-survivor case needs no guard): curate-in resolves with
+        # the first job that scans the input -- the pre-filter boundary
+        # when a pre-filter is on -- and curate-out with the write
         in_obs, out_obs = Observation("curate-in"), Observation("curate-out")
-        docs = spark.read.parquet(args.docs).observe(
-            in_obs, F.count(F.lit(1)).alias("n")
-        )
-        survivors = curation_survivors(
-            docs,
-            max_repetition=args.max_repetition,
-            max_contamination=args.max_contamination,
-            benchmark_max_id=args.benchmark_max_id,
-            drop_benchmark=not args.keep_benchmark,
-            trim_spans_k=args.trim_spans,
-            boilerplate_seg_words=args.boilerplate_segs,
-            boilerplate_df_threshold=args.boilerplate_df,
-            gopher_rules=args.gopher,
-            min_source_stop_rate=args.min_source_rep,
-            min_novelty=args.min_novelty,
-        ).observe(out_obs, F.count(F.lit(1)).alias("n"))
-        writer = survivors.write.mode("overwrite")
-        if args.partition_by:
-            writer = writer.partitionBy(args.partition_by)
-        writer.parquet(args.out)
+        # the scope releases every frame the stages cache or checkpoint
+        # once the write has consumed them
+        with cache_scope():
+            docs = spark.read.parquet(args.docs)
+            n_parts = _out_partitions(docs)
+            survivors = curation_survivors(
+                docs.observe(in_obs, F.count(F.lit(1)).alias("n")),
+                max_repetition=args.max_repetition,
+                max_contamination=args.max_contamination,
+                benchmark_max_id=args.benchmark_max_id,
+                drop_benchmark=not args.keep_benchmark,
+                trim_spans_k=args.trim_spans,
+                boilerplate_seg_words=args.boilerplate_segs,
+                boilerplate_df_threshold=args.boilerplate_df,
+                gopher_rules=args.gopher,
+                min_source_stop_rate=args.min_source_rep,
+                min_novelty=args.min_novelty,
+            ).observe(out_obs, F.count(F.lit(1)).alias("n"))
+            writer = survivors.repartition(n_parts).write.mode("overwrite")
+            if args.partition_by:
+                writer = writer.partitionBy(args.partition_by)
+            writer.parquet(args.out)
         total, kept = in_obs.get["n"], out_obs.get["n"]
         print(
             json.dumps(

@@ -17,22 +17,33 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .caching import checkpoint_partitions
+
 
 def _scan_file_count(df: DataFrame) -> int | None:
-    """Number of files under the frame's scan relations, from the
-    ANALYZED plan's file indexes -- pure driver metadata (no job, no
-    ``df.rdd`` conversion, which would re-plan the query to RDD form on
-    every guarded call).  None when any relation isn't file-based (e.g.
-    a local createDataFrame relation): the caller then assumes the
-    input is small -- exactly the in-memory test-corpus case."""
+    """Number of input splits under the frame's leaves, from the
+    ANALYZED plan -- pure driver metadata (no job, no ``df.rdd``
+    conversion, which would re-plan the query to RDD form on every
+    guarded call).  A file relation counts its files; a frame
+    materialized by ``scoped_checkpoint`` counts the partitions it was
+    materialized in, so a frame spread once before its checkpoint is
+    not round-robined again by every operator that reads it.  None
+    when any leaf is neither (e.g. a local createDataFrame relation):
+    the caller then assumes the input is small -- exactly the
+    in-memory test-corpus case."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         total = 0
         for i in range(leaves.size()):
             leaf = leaves.apply(i)
-            if leaf.nodeName() != "LogicalRelation":
+            if leaf.nodeName() == "LogicalRelation":
+                total += len(leaf.relation().location().inputFiles())
+            elif leaf.nodeName() == "LogicalRDD" and (
+                n := checkpoint_partitions(leaf)
+            ) is not None:
+                total += n
+            else:
                 return None
-            total += len(leaf.relation().location().inputFiles())
         return total
     except Exception:
         return None
@@ -41,7 +52,8 @@ def _scan_file_count(df: DataFrame) -> int | None:
 def spread_small_scan(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     """Round-robin repartition ``df`` to the cluster's default
     parallelism, but ONLY if the input is materially under-split: fewer
-    source FILES than ``min_fraction`` of the default parallelism.
+    source FILES (or checkpoint partitions) than ``min_fraction`` of
+    the default parallelism.
     Well-partitioned inputs (a 100 TB scan has tens of thousands of
     splits) pass through untouched -- no shuffle added to the plan.
 

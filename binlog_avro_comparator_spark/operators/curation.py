@@ -1,13 +1,27 @@
 """The corpus-curation composition, shared by the oracle-checked
 ``corpus_curation_pipeline`` query and the ``curate`` CLI so the two
 can never drift: repetition cap -> near-dup canonicalization ->
-contamination cap (everything but the clustering fixpoint is one lazy
-plan; see SCALE.md for the per-stage shuffle audit)."""
+contamination cap (see SCALE.md for the per-stage shuffle audit).
+
+The composition is a DAG, not a tree: every stage reads the corpus and
+the last stages read the survivors twice, so one lazy plan would
+re-expand the whole upstream once per reference.  Two stage boundaries
+are therefore materialized once each, eagerly and with their lineage
+cut (``scoped_checkpoint``): the corpus after the corpus-level
+pre-filters (Gopher, source reputation, novelty), and the survivors
+before boilerplate / span trimming -- the first only when a pre-filter
+is on, the second only when a rewrite is on, so the default recipe
+stays one lazy plan around the clustering fixpoint.  Both boundaries, and the clustering
+fixpoint's rounds, are registered in ``functions.caching``; the caller
+releases them with ``cache_scope()`` once it has consumed the result
+(the ``curate`` CLI scopes its whole run)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.caching import scoped_checkpoint
+from ..functions.partitioning import spread_small_scan
 from .dedup import (
     dedup_keep_canonical,
     remove_boilerplate_segments,
@@ -102,6 +116,10 @@ def curation_survivors(
         # shingle have no novelty row and are kept (score undefined,
         # not zero)
         documents = documents.join(stale, on="doc_id", how="left_anti")
+    if gopher_rules or min_source_stop_rate is not None or min_novelty is not None:
+        # boundary 1: repetition, clustering and contamination all read
+        # the pre-filtered corpus -- computed once, spread once
+        documents = scoped_checkpoint(spread_small_scan(documents))
     rep_ok = (
         repetition_scores(documents)
         .filter(F.col("repetition_ratio") <= max_repetition)
@@ -116,6 +134,10 @@ def curation_survivors(
     out = kept.join(contaminated, on="doc_id", how="left_anti")
     if drop_benchmark:
         out = out.filter(F.col("doc_id") >= benchmark_max_id)
+    if boilerplate_seg_words is not None or trim_spans_k is not None:
+        # boundary 2: the rewrites below join the survivors back onto
+        # an operator over the survivors -- two references
+        out = scoped_checkpoint(out)
     if boilerplate_seg_words is not None:
         deboiler = remove_boilerplate_segments(
             out,

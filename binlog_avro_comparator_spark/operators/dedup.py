@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.caching import scoped_cache
+from ..functions.caching import scoped_cache, scoped_checkpoint
 from ..functions.partitioning import spread_small_scan
 from .textstats import TOKEN_RE, gram_array, word_hash
 
@@ -407,11 +407,11 @@ def dedup_clusters(
     EDGE frame (nodes outside every edge never enter).  Rounds needed
     = graph diameter; near-dup graphs are shallow (LSH buckets create
     clique-ish clusters), so a handful of rounds closes even web-scale
-    corpora.  Lineage is truncated per round (localCheckpoint) and the
-    convergence probe is a single sum() action -- label sums decrease
-    monotonically and stall exactly at the fixpoint.  Raises if
-    max_iter rounds don't converge rather than returning a partial
-    clustering.
+    corpora.  Lineage is truncated per round (scoped_checkpoint, released
+    with the caller's cache_scope) and the convergence probe is a single
+    sum() action -- label sums decrease monotonically and stall exactly
+    at the fixpoint.  Raises if max_iter rounds don't converge rather
+    than returning a partial clustering.
 
     ``edges`` overrides the default MinHash-LSH pair graph with any
     (doc_a, doc_b) frame -- e.g. simhash or embedding near-dup pairs.
@@ -421,16 +421,14 @@ def dedup_clusters(
     # materialize the edge frame ONCE -- it feeds the initial labels and
     # every propagation round; without this each round would re-run the
     # whole upstream candidate-generation pipeline
-    sym = (
+    sym = scoped_checkpoint(
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint()
     )
-    labels = (
+    labels = scoped_checkpoint(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     for _ in range(max_iter):
@@ -439,15 +437,13 @@ def dedup_clusters(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
-            labels.join(nbr, labels["node"] == nbr["src"], "left")
-            .select(
+        new_labels = scoped_checkpoint(
+            labels.join(nbr, labels["node"] == nbr["src"], "left").select(
                 labels["node"],
                 F.least(
                     labels["label"], F.coalesce(F.col("nbr_label"), labels["label"])
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
         new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
         labels = new_labels

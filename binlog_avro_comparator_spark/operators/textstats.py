@@ -1551,7 +1551,11 @@ def _bpe_safe_batch(
     among UNAFFECTED candidates are safe because the collect's sort
     (count desc, l, r) is exactly greedy's tie order.  Stops at the
     first candidate that fails either test (skipping would change
-    greedy order).  Pure driver-side logic over <= k rows."""
+    greedy order), and right after a self-pair (l == r): the pairs it
+    creates ((M, l), (l, M)) are bounded by the self-pair's own count,
+    which is not among the visible sharing candidates ('aaa' x 100
+    under ('a', 'a') leaves ('aa', 'a') at 100, above any later
+    disjoint candidate).  Pure driver-side logic over <= k rows."""
     selected: list[tuple[str, str, int]] = []
     used: set[str] = set()
     truncated = len(cand) == k_window
@@ -1574,6 +1578,10 @@ def _bpe_safe_batch(
             if c <= max(bshare, floor):
                 break
         selected.append((l, r, c))
+        if l == r:
+            # a self-pair (s, s) mints (ss, s) and (s, ss), bounded only
+            # by its own count -- which no later candidate is compared to
+            break
         used.add(l)
         used.add(r)
     return selected

@@ -154,6 +154,22 @@ def test_spread_small_scan_is_conditional(spark, tmp_path):
     # non-file inputs (in-memory test corpora) are assumed small
     assert _scan_file_count(spark.range(0, 100, 1, 1)) is None
     assert spread_small_scan(spark.range(0, 100, 1, 1)).rdd.getNumPartitions() == target
+    local = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    assert _scan_file_count(local) is None
+    # a checkpoint counts the partitions it was materialized in: spread
+    # once before it, it is not round-robined again downstream
+    from binlog_avro_comparator_spark.functions.caching import (
+        cache_scope,
+        scoped_checkpoint,
+    )
+
+    with cache_scope():
+        spread = scoped_checkpoint(spread_small_scan(single))
+        assert _scan_file_count(spread.filter("id > 10")) == target
+        assert spread_small_scan(spread) is spread
+        narrow = scoped_checkpoint(single)
+        assert _scan_file_count(narrow) == 1
+        assert spread_small_scan(narrow).rdd.getNumPartitions() == target
 
 
 def test_simhash_band_slices_partition_bits():
@@ -4257,6 +4273,14 @@ def test_bpe_train_textbook_merges(spark):
     # after the greedy pass each word is ['aa','aa'] -> pair count 2
     assert (second.left_sym, second.right_sym, second.pair_count) == (
         "aa", "aa", 2)
+    # a batched round must stop after a self-pair: ('a','a') mints
+    # ('aa','a') at 100, which outranks the untouched ('b','c') at 90
+    selfpair = spark.createDataFrame(
+        [(0, " ".join(["aaa"] * 100 + ["bc"] * 90))], "doc_id long, text string"
+    )
+    assert [tuple(r) for r in bpe_train(selfpair, n_merges=2).collect()] == [
+        (1, "a", "a", 200), (2, "aa", "a", 100)
+    ]
     # the encode report applies the same merges: 'aaab' after 3 rounds
     # is one token of 4 chars seen twice
     from binlog_avro_comparator_spark.operators.textstats import (

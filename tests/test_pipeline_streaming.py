@@ -249,7 +249,7 @@ def test_audio_zero_rate_wav_falls_back(spark):
     assert row.sample_rate > 0
 
 
-def test_curate_cli_end_to_end(spark, tmp_path):
+def test_curate_cli_end_to_end(spark, tmp_path, capsys):
     """The curation CLI writes surviving full rows and reports counts.
     (Injects the session-scoped SparkSession; the CLI only stops
     sessions it created itself.)"""
@@ -282,6 +282,35 @@ def test_curate_cli_end_to_end(spark, tmp_path):
     langs = {p.name.split("=")[1] for p in out2.glob("lang=*")}
     assert len(langs) >= 2  # hive-partitioned by language
     assert spark.read.parquet(str(out2)).count() == kept.count()
+    # the full recipe materializes its stage boundaries before the
+    # write: the printed counters still describe this run (curate-in
+    # resolves on the first materialization, curate-out on the write),
+    # and none of the RDDs it checkpointed outlives the call (RDD ids,
+    # not counts: the ContextCleaner may drop other tests' checkpoints
+    # meanwhile)
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs = "/root/testdata/sf0.001/documents.parquet"
+    out3 = tmp_path / "curated_full"
+    before = persisted()
+    capsys.readouterr()
+    rc3 = curate_main(
+        ["--docs", docs, "--out", str(out3), "--gopher",
+         "--min-novelty", "0.02", "--trim-spans", "4"],
+        spark=spark,
+    )
+    assert rc3 == 0
+    assert not persisted() - before
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    total = spark.read.parquet(docs).count()
+    written = spark.read.parquet(str(out3)).count()
+    assert summary["total_docs"] == total
+    assert summary["kept_docs"] == written
+    assert summary["dropped_docs"] == total - written
+    assert 0 < written < total
+    # one part file per maxPartitionBytes of input, however AQE plans
+    assert len(list(out3.glob("part-*"))) == 1
 
 
 def test_curate_cli_zero_survivors(spark, tmp_path):

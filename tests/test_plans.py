@@ -1768,3 +1768,31 @@ def test_lsh_fold_read_is_scan_only_and_probe_stays_equi(spark, tmp_path):
     pplan = _plan(probe)
     assert "CartesianProduct" not in pplan
     assert "BroadcastNestedLoopJoin" not in pplan
+
+
+def test_curation_survivors_is_a_dag(spark):
+    """The full curation recipe reads its materialized stage boundaries
+    instead of re-expanding the upstream tree once per reference: the
+    final plan scans the input parquet at most 3 times (a tree scans
+    it ~65 times) and stays under 20 Exchange nodes (a tree has ~90)."""
+    import re as _re
+
+    from binlog_avro_comparator_spark.functions.caching import cache_scope
+    from binlog_avro_comparator_spark.operators.curation import (
+        curation_survivors,
+    )
+
+    with cache_scope():
+        plan = _plan(
+            curation_survivors(
+                spark.read.parquet(f"{SF}/documents.parquet"),
+                max_repetition=0.01,
+                max_contamination=0.05,
+                drop_benchmark=True,
+                trim_spans_k=4,
+                gopher_rules=True,
+                min_novelty=0.02,
+            )
+        )
+    assert len(_re.findall(r"^\(\d+\) Scan parquet", plan, _re.M)) <= 3, plan
+    assert len(_re.findall(r"^\(\d+\) Exchange", plan, _re.M)) <= 20, plan

@@ -1302,3 +1302,12 @@ def test_bpe_safe_batch_prefix_rules():
     assert _bpe_safe_batch(cand, 32, 2) == [
         ("a", "b", 100), ("c", "d", 50)
     ]
+    # a self-pair ends the batch: {'aaa' x 100, 'bc' x 90} counts
+    # ('a','a',200) then ('b','c',90), but after ('a','a') the created
+    # ('aa','a') has count 100, so sequential greedy's second merge is
+    # ('aa','a',100), not ('b','c',90)
+    cand = [R("a", "a", 200), R("b", "c", 90)]
+    assert _bpe_safe_batch(cand, 32, 8) == [("a", "a", 200)]
+    assert _bpe_safe_batch([R("x", "y", 300), *cand], 32, 8) == [
+        ("x", "y", 300), ("a", "a", 200)
+    ]
