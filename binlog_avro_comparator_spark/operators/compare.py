@@ -19,10 +19,9 @@ Scale design: the three joins share one shuffle key (binlog_file,
 binlog_position).  At 100 TB both sides are large, so the default lets
 Catalyst/AQE pick the physical join (sort-merge with both sides hash-
 partitioned on the key; AQE converts to broadcast when a side turns out
-small, and splits skewed keys).  ``CompareConfig.broadcast_build=True``
-forces the reference's asymmetry (bounded binlog build side) when the
-caller knows it holds.  All comparison expressions are built-in column
-functions -- whole-stage-codegen, no Python in the hot path.
+small, and splits skewed keys).  All comparison expressions are
+built-in column functions -- whole-stage-codegen, no Python in the hot
+path.
 
 Note the reference counts *per probe row*: duplicate avro keys each
 count as a match (compare_timestamps.go:194-195), timestamp-parse
@@ -72,9 +71,6 @@ class CompareConfig:
     # 'DeleteRowsV2' never matches 'DeleteRowsEventV2').  Default is the
     # *intended* semantics; strict mode reproduces the quirk.
     strict_reference_parity: bool = False
-    # None -> let Catalyst/AQE choose; True -> broadcast the binlog
-    # (build) side like the reference's in-memory map (:73).
-    broadcast_build: bool | None = None
 
 
 def prepare_binlog(binlog: DataFrame) -> DataFrame:
@@ -159,23 +155,10 @@ def inferred_change_type(event_type: F.Column, cfg: CompareConfig) -> F.Column:
     )
 
 
-def diff_joined(
-    binlog_prepared: DataFrame,
-    avro_prepared: DataFrame,
-    cfg: CompareConfig = CompareConfig(),
-) -> DataFrame:
-    """The whole diff in ONE join: full-outer on the composite key with
-    presence markers, plus the C1-C5 comparison columns.
-
-    This subsumes J3 (both present), J4 (binlog side absent), and J5
-    (avro side absent): findings and summary each become a single pass
-    over this frame instead of three separate joins that would rescan
-    and re-shuffle both inputs.  At scale: one shuffle per side
-    (sort-merge full-outer); the narrower inner/anti operators below
-    stay available -- and broadcastable -- when only one slice is
-    wanted.
-    """
-    build = binlog_prepared.select(
+def _binlog_build(binlog_prepared: DataFrame, *extra) -> DataFrame:
+    """The binlog side of a diff join: key, event fields, and the
+    schema/table renamed apart from the avro side's."""
+    return binlog_prepared.select(
         *KEY,
         "event_type",
         "timestamp",
@@ -183,12 +166,12 @@ def diff_joined(
         "gtid_next",
         F.col("schema").alias("binlog_schema"),
         F.col("table").alias("binlog_table"),
-        "line_no",
-        F.lit(True).alias("__has_binlog"),
+        *extra,
     )
-    probe = avro_prepared.withColumn("__has_avro", F.lit(True))
-    j = probe.join(build, on=KEY, how="full_outer")
 
+
+def _with_comparisons(j: DataFrame, cfg: CompareConfig) -> DataFrame:
+    """C1-C5 comparison columns over a joined avro x binlog frame."""
     binlog_ms = binlog_effective_ms(
         F.col("immediate_commmit_timestamp"), F.col("timestamp")
     )
@@ -219,6 +202,27 @@ def diff_joined(
     )
 
 
+def diff_joined(
+    binlog_prepared: DataFrame,
+    avro_prepared: DataFrame,
+    cfg: CompareConfig = CompareConfig(),
+) -> DataFrame:
+    """The whole diff in ONE join: full-outer on the composite key with
+    presence markers, plus the C1-C5 comparison columns.
+
+    This subsumes J3 (both present), J4 (binlog side absent), and J5
+    (avro side absent): findings and summary each become a single pass
+    over this frame instead of three separate joins that would rescan
+    and re-shuffle both inputs.  At scale: one shuffle per side
+    (sort-merge full-outer); the narrower inner/anti operators below
+    stay available -- and broadcastable -- when only one slice is
+    wanted.
+    """
+    build = _binlog_build(binlog_prepared, "line_no", F.lit(True).alias("__has_binlog"))
+    probe = avro_prepared.withColumn("__has_avro", F.lit(True))
+    return _with_comparisons(probe.join(build, on=KEY, how="full_outer"), cfg)
+
+
 def matched_pairs(
     binlog_prepared: DataFrame,
     avro_prepared: DataFrame,
@@ -228,50 +232,9 @@ def matched_pairs(
     avro record (probe-side granularity, like the reference).
 
     Narrow variant: when only the matched slice is needed, an inner
-    join lets Catalyst/AQE broadcast the build side (cfg.broadcast_build
-    forces it, mirroring the reference's in-memory map)."""
-    build = binlog_prepared.select(
-        *KEY,
-        "event_type",
-        "timestamp",
-        "immediate_commmit_timestamp",
-        "gtid_next",
-        F.col("schema").alias("binlog_schema"),
-        F.col("table").alias("binlog_table"),
-    )
-    if cfg.broadcast_build:
-        build = F.broadcast(build)
-    j = avro_prepared.join(build, on=KEY, how="inner")
-
-    binlog_ms = binlog_effective_ms(
-        F.col("immediate_commmit_timestamp"), F.col("timestamp")
-    )
-    inferred = inferred_change_type(F.col("event_type"), cfg)
-    j = (
-        j.withColumn("binlog_ms", binlog_ms)
-        .withColumn("ts_delta_ms", F.col("source_timestamp") - F.col("binlog_ms"))
-        .withColumn(
-            "ts_mismatch",
-            F.col("binlog_ms").isNull()
-            | (F.abs(F.col("ts_delta_ms")) > cfg.tolerance_ms),
-        )
-        .withColumn("inferred_change_type", inferred)
-        .withColumn(
-            "gtid_mismatch",
-            F.col("binlog_ms").isNotNull()  # parse failure skips checks (:210)
-            & F.col("gtid").isNotNull() & (F.col("gtid") != "")
-            & F.col("gtid_next").isNotNull() & (F.col("gtid_next") != "")
-            & (F.col("gtid") != F.col("gtid_next")),
-        )
-        .withColumn(
-            "change_type_mismatch",
-            F.col("binlog_ms").isNotNull()
-            & F.col("change_type").isNotNull() & (F.col("change_type") != "")
-            & (F.col("inferred_change_type") != "")
-            & (F.upper(F.col("change_type")) != F.col("inferred_change_type")),
-        )
-    )
-    return j
+    join lets Catalyst/AQE broadcast the build side."""
+    j = avro_prepared.join(_binlog_build(binlog_prepared), on=KEY, how="inner")
+    return _with_comparisons(j, cfg)
 
 
 def avro_only(binlog_prepared: DataFrame, avro_prepared: DataFrame) -> DataFrame:

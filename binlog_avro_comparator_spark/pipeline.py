@@ -68,6 +68,13 @@ def run_comparison(
             "provide exactly one of binlog_text_dir / binlog_jsonl / "
             "binlog_binary_dir"
         )
+    # Spark matches cached plans by path, not content, and this run
+    # caches frames over its inputs: drop what an earlier run on the
+    # same paths cached, so rewritten inputs are read afresh (lazy --
+    # no pass over the data)
+    for path in (binlog_text_dir, binlog_jsonl, binlog_binary_dir, avro_jsonl):
+        if path is not None:
+            spark.catalog.refreshByPath(path)
 
     if binlog_binary_dir is not None:
         from .sources.binlog_binary import read_binlog_binary_dir
@@ -79,6 +86,7 @@ def run_comparison(
         )
         if materialize_binlog_jsonl:
             binlog.write.mode("overwrite").json(materialize_binlog_jsonl)
+            spark.catalog.refreshByPath(materialize_binlog_jsonl)
             binlog = spark.read.json(materialize_binlog_jsonl)
     else:
         # ordered reader: line_no is a real per-file ordinal, so the

@@ -22,6 +22,12 @@ from ..fixtures import (
     derive_typed_rows,
     generate_parser_text_lines,
 )
+from ..functions.caching import (
+    materialized,
+    persisted,
+    read_stored_parquet,
+    scratch_dir,
+)
 from ..functions.zorder import zorder_key_n_sql, zorder_key_sql
 from ..functions.hilbert import hilbert_sql_ctes
 from ..sources.avro import DATASTREAM_AVRO_SCHEMA, read_avro_dir

@@ -21,12 +21,6 @@ def _q_cdc_avro_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fixed sync marker so generated fixture files are byte-stable run-to-run.
 _AVRO_FIXTURE_SYNC = bytes(range(16))
 
-# fixture dirs memoized per (kind, sf_dir): repeated invocations (bench
-# loops, driver double-runs) reuse the files instead of re-collecting,
-# re-encoding, and leaking a fresh tempdir each call
-_FIXTURE_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _fixture_write_distributed(df: DataFrame, file_col: str, d: str, render) -> None:
     """Write one fixture file per distinct ``file_col`` value from the
     EXECUTORS: hash-repartition on the file key (all rows of one file
@@ -186,19 +180,13 @@ def _q_cdc_avro_evolved_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake of millions of files.  Nulls are NOT zero-coalesced here:
     surfacing which fields the old producer couldn't know is the
     point."""
-    import tempfile
-
     ensure_session_conf(spark)
     from ..sources.avro import DATASTREAM_AVRO_READER_SCHEMA, read_avro_python
 
-    d = _FIXTURE_DIRS.get(("avro_evolved", sf_dir))
-    if d is None:
-        avro = derive_avro_rows(load_table(spark, sf_dir, "events"))
-        d = tempfile.mkdtemp(prefix="cdc_avro_evolved_")
-        _fixture_write_distributed(avro, "binlog_file", d, _render_avro_evolved)
-        _FIXTURE_DIRS[("avro_evolved", sf_dir)] = d
     nested = read_avro_python(
-        spark, d, reader_schema=DATASTREAM_AVRO_READER_SCHEMA
+        spark,
+        _evolved_fixture_dir(spark, sf_dir),
+        reader_schema=DATASTREAM_AVRO_READER_SCHEMA,
     )
     sm = "source_metadata"
     return nested.select(
@@ -278,14 +266,11 @@ def _q_cdc_avro_logical_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     logicals; here they stay typed and queryable.  Output canonicalizes
     the temporals for the cross-engine compare (epoch micros / ISO
     strings); `amount` stays DECIMAL end-to-end."""
-    import tempfile
-
     ensure_session_conf(spark)
     from ..sources.avro import read_avro_logical
     from pyspark.sql import types as T
 
-    d = _FIXTURE_DIRS.get(("avro_logical", sf_dir))
-    if d is None:
+    def build(d):
         eid = F.col("event_id")
         cents = F.lit(1) + (eid * 53) % 99999999
         amount = F.concat(
@@ -308,12 +293,11 @@ def _q_cdc_avro_logical_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lpad(eid.cast("string"), 12, "0"),
             ).alias("uid"),
         )
-        d = tempfile.mkdtemp(prefix="cdc_avro_logical_")
         _fixture_write_distributed(frame, "file_no", d, _render_avro_logical)
-        _FIXTURE_DIRS[("avro_logical", sf_dir)] = d
+
     nested = read_avro_logical(
         spark,
-        d,
+        materialized(spark, "avro_logical", build, sf_dir),
         T.StructType(
             [
                 T.StructField("id", T.LongType()),
@@ -339,15 +323,11 @@ def _q_cdc_avro_logical_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _evolved_fixture_dir(spark, sf_dir) -> str:
-    import tempfile
-
-    d = _FIXTURE_DIRS.get(("avro_evolved", sf_dir))
-    if d is None:
+    def build(d):
         avro = derive_avro_rows(load_table(spark, sf_dir, "events"))
-        d = tempfile.mkdtemp(prefix="cdc_avro_evolved_")
         _fixture_write_distributed(avro, "binlog_file", d, _render_avro_evolved)
-        _FIXTURE_DIRS[("avro_evolved", sf_dir)] = d
-    return d
+
+    return materialized(spark, "avro_evolved", build, sf_dir)
 
 
 def _q_cdc_avro_schema_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,17 +369,13 @@ def _q_cdc_avro_native_scan_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _avro_fixture_scan(spark: SparkSession, sf_dir: str, engine: str) -> DataFrame:
-    import os
-    import tempfile
-
     ensure_session_conf(spark)
-    cached = _FIXTURE_DIRS.get(("avro_native", sf_dir))
-    if cached is not None:
-        return _avro_native_probe(spark, cached, engine)
-    avro = derive_avro_rows(load_table(spark, sf_dir, "events"))
-    d = tempfile.mkdtemp(prefix="cdc_avro_native_")
-    _fixture_write_distributed(avro, "binlog_file", d, _render_avro)
-    _FIXTURE_DIRS[("avro_native", sf_dir)] = d
+
+    def build(d):
+        avro = derive_avro_rows(load_table(spark, sf_dir, "events"))
+        _fixture_write_distributed(avro, "binlog_file", d, _render_avro)
+
+    d = materialized(spark, "avro_native", build, sf_dir)
     return _avro_native_probe(spark, d, engine)
 
 
@@ -524,19 +500,12 @@ def _q_cdc_parse_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     `spark.read.format("binlogtext")`, one InputPartition per file)
     instead of the wholetext recipe -- two source implementations, one
     parser, one oracle.  The fixture write-out is driver-side
-    scaffolding (memoized per sf_dir, bounded by the fixture line
-    count)."""
-    import tempfile
-
+    scaffolding (one store directory per events table, bounded by the
+    fixture line count)."""
     ensure_session_conf(spark)
     from ..sources.pyds import register_binlog_text_source
 
-    d = _FIXTURE_DIRS.get(("parser_text", sf_dir))
-    if d is None:
-        lines = generate_parser_text_lines(load_table(spark, sf_dir, "events"))
-        d = tempfile.mkdtemp(prefix="pyds_parser_text_")
-        _fixture_write_distributed(lines, "binlog_file", d, _render_parser_text)
-        _FIXTURE_DIRS[("parser_text", sf_dir)] = d
+    d = _parser_text_fixture_dir(spark, sf_dir)
     register_binlog_text_source(spark)
     raw = spark.read.format("binlogtext").option("path", d).load()
     return parse_binlog_text(raw).select(
@@ -550,6 +519,17 @@ def _q_cdc_parse_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "binlog_file",
         "line_no",
     )
+
+
+def _parser_text_fixture_dir(spark, sf_dir) -> str:
+    """The events rendered as parser text, one file per binlog segment
+    (the pyds batch and stream readers' shared input)."""
+
+    def build(d):
+        lines = generate_parser_text_lines(load_table(spark, sf_dir, "events"))
+        _fixture_write_distributed(lines, "binlog_file", d, _render_parser_text)
+
+    return materialized(spark, "parser_text", build, sf_dir)
 
 
 def _q_cdc_resume_bookmarks(spark, sf_dir):
@@ -583,11 +563,9 @@ def _binlog_binary_fixture_dir(spark, sf_dir) -> str:
     by the metadata-decode, row-image-decode, and payload-diff queries:
     derived events (WITH row payloads) encoded as genuine binlog v4
     files by the executors (_fixture_write_distributed -- no driver
-    collect), memoized like every other fixture."""
-    import tempfile
+    collect), stored like every other fixture."""
 
-    d = _FIXTURE_DIRS.get(("binlog_binary", sf_dir))
-    if d is None:
+    def build(d):
         b = derive_binlog_events_with_payload(
             load_table(spark, sf_dir, "events")
         ).filter(F.col("binlog_file") != "")
@@ -610,10 +588,9 @@ def _binlog_binary_fixture_dir(spark, sf_dir) -> str:
             .alias("__next_file"),
         )
         b = b.join(F.broadcast(chain), "binlog_file")
-        d = tempfile.mkdtemp(prefix="binlog_binary_")
         _fixture_write_distributed(b, "binlog_file", d, _render_binlog_binary)
-        _FIXTURE_DIRS[("binlog_binary", sf_dir)] = d
-    return d
+
+    return materialized(spark, "binlog_binary", build, sf_dir)
 
 
 def _q_cdc_parse_binlog_binary(spark, sf_dir):
@@ -676,16 +653,13 @@ def _typed_binlog_fixture_dir(spark, sf_dir) -> str:
     """Binary binlog fixture dir for the TYPED table (extended column
     types: DATE/YEAR/DATETIME2/TIMESTAMP2/TIME2/NEWDECIMAL/TEXT/CHAR/
     ENUM/SET), one WRITE image per DML event; executor-rendered and
-    memoized like the payload fixture."""
-    import tempfile
+    stored like the payload fixture."""
 
-    d = _FIXTURE_DIRS.get(("binlog_typed", sf_dir))
-    if d is None:
+    def build(d):
         b = derive_typed_rows(load_table(spark, sf_dir, "events"))
-        d = tempfile.mkdtemp(prefix="binlog_typed_")
         _fixture_write_distributed(b, "binlog_file", d, _render_binlog_typed)
-        _FIXTURE_DIRS[("binlog_typed", sf_dir)] = d
-    return d
+
+    return materialized(spark, "binlog_typed", build, sf_dir)
 
 
 _TYPED_NAMES = [
@@ -754,19 +728,16 @@ def _render_avro_typed(fname: str, rows: list[dict]) -> tuple[str, bytes]:
 
 def _typed_avro_fixture_dir(spark, sf_dir) -> str:
     """Real ``.avro`` fixture dir for the typed twin (decimal +
-    timestamp-millis logical columns); executor-rendered and memoized
+    timestamp-millis logical columns); executor-rendered and stored
     like the binlog twin."""
-    import tempfile
 
-    d = _FIXTURE_DIRS.get(("avro_typed", sf_dir))
-    if d is None:
+    def build(d):
         from ..fixtures import derive_typed_avro_columns
 
         cols = derive_typed_avro_columns(load_table(spark, sf_dir, "events"))
-        d = tempfile.mkdtemp(prefix="avro_typed_")
         _fixture_write_distributed(cols, "binlog_file", d, _render_avro_typed)
-        _FIXTURE_DIRS[("avro_typed", sf_dir)] = d
-    return d
+
+    return materialized(spark, "avro_typed", build, sf_dir)
 
 
 def _typed_avro_spark_schema():
@@ -1173,69 +1144,52 @@ def _q_gtid_coverage(spark, sf_dir):
     return C.gtid_coverage(bp, ap)
 
 
-_DDL_STMT_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _ddl_statements(spark, sf_dir):
     """Shared DDL extraction: the Query-event text fixture rendered
     with deterministic DDL strings, parsed through the REAL text
     pipeline (P1-P9), then regexp-extracted into statements.  Seven
     registered queries consume this frame, so the parsed statements
-    (statement-cardinality -- tiny) persist once per (session,
-    sf_dir); each consumer gets a child frame so operator cache
-    scopes never release it."""
-    from ..fixtures import generate_ddl_text_lines
-
+    (statement-cardinality -- tiny) are stored once per events table
+    and their scan persists once per session; each consumer gets a
+    child frame so operator cache scopes never release it."""
     import os
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DDL_STMT_CACHE.get(key)
-    if hit is None:
-        ensure_session_conf(spark)
-        # materialize the parsed statements to PARQUET once per sf_dir,
-        # then persist the scan (the guard-frame pattern): a bare
-        # .persist() caches execution but every consumer still carries
-        # -- and the analyzer re-walks, per query -- the full logical
-        # lineage (the P1-P9 parse + the grammar's verb-family union),
-        # which the r11 grammar grew to a 100k-LINE formatted plan.
-        # Cutting the lineage at this statement-cardinality frame is
-        # guide 3.3's "materialise an intermediate to truncate the
-        # plan": measured 2-20x per DDL-tier query at sf0.1 (e.g.
-        # ddl_parse_anomalies 16.7 s -> 2.4 s, schema_column_matrix
-        # 35 s -> 5 s), and the same write is what the 100 TB shape
-        # wants -- the statement log is the durable, reusable artifact.
-        d = _FIXTURE_DIRS.get(("ddl_statements", sf_dir))
-        if d is None:
-            lines = generate_ddl_text_lines(
-                load_table(spark, sf_dir, "events")
-            )
-            # materialize the Query-rows slice before the verb-family
-            # union so the parse pipeline runs once, not once per
-            # union branch (ddl._query_rows docstring)
-            from ..operators.ddl import (
-                _query_rows,
-                _statements_from_query_rows,
-            )
+    ensure_session_conf(spark)
+    # materialize the parsed statements to PARQUET, then persist the
+    # scan (the guard-frame pattern): a bare .persist() caches
+    # execution but every consumer still carries -- and the analyzer
+    # re-walks, per query -- the full logical lineage (the P1-P9 parse
+    # + the grammar's verb-family union), which the r11 grammar grew to
+    # a 100k-LINE formatted plan.  Cutting the lineage at this
+    # statement-cardinality frame is guide 3.3's "materialise an
+    # intermediate to truncate the plan": measured 2-20x per DDL-tier
+    # query at sf0.1 (e.g. ddl_parse_anomalies 16.7 s -> 2.4 s,
+    # schema_column_matrix 35 s -> 5 s), and the same write is what
+    # the 100 TB shape wants -- the statement log is the durable,
+    # reusable artifact.
+    def build(d):
+        from ..fixtures import generate_ddl_text_lines
+        from ..operators.ddl import _query_rows, _statements_from_query_rows
 
-            q = _query_rows(parse_binlog_text(lines)).localCheckpoint()
-            stmts = _statements_from_query_rows(q)
-            d = tempfile.mkdtemp(prefix="ddl_statements_")
-            stmts.write.parquet(os.path.join(d, "stmts"))
-            _FIXTURE_DIRS[("ddl_statements", sf_dir)] = d
-        # re-partition HASH on the fold key, few partitions: every
-        # downstream view windows/aggregates by table identity -- a
-        # cached frame KEEPS its outputPartitioning, so the views'
-        # first exchange is satisfied by the cache instead of
-        # re-shuffling 32 near-empty partitions per stage (the family
-        # is stage-count-bound, not data-bound)
-        hit = (
-            spark.read.parquet(os.path.join(d, "stmts"))
-            .repartition(8, "schema_name", "table_name")
-            .persist()
+        lines = generate_ddl_text_lines(load_table(spark, sf_dir, "events"))
+        # materialize the Query-rows slice before the verb-family
+        # union so the parse pipeline runs once, not once per union
+        # branch (ddl._query_rows docstring)
+        q = _query_rows(parse_binlog_text(lines)).localCheckpoint()
+        _statements_from_query_rows(q).write.parquet(os.path.join(d, "stmts"))
+
+    d = materialized(spark, "ddl_statements", build, sf_dir)
+    # re-partition HASH on the fold key, few partitions: every
+    # downstream view windows/aggregates by table identity -- a cached
+    # frame KEEPS its outputPartitioning, so the views' first exchange
+    # is satisfied by the cache instead of re-shuffling 32 near-empty
+    # partitions per stage (the family is stage-count-bound, not
+    # data-bound)
+    return persisted(
+        read_stored_parquet(spark, os.path.join(d, "stmts")).repartition(
+            8, "schema_name", "table_name"
         )
-        _DDL_STMT_CACHE[key] = hit
-    return hit.select("*")
+    )
 
 
 def _q_cdc_schema_timeline(spark, sf_dir):
@@ -1264,44 +1218,33 @@ def _q_cdc_schema_columns(spark, sf_dir):
     return schema_column_matrix(_ddl_statements(spark, sf_dir))
 
 
-# decoded-payload cache for the DDL-guard family: the binary decode +
+# decoded-payload frames for the DDL-guard family: the binary decode +
 # avro derivation is the sweep's heavyweight (the r9 verdict measured
 # 104 s/query when each of the -- now three -- guard queries re-ran it
 # under one session).  Two layers, each fixing a measured failure:
-# MATERIALIZE the frames once per sf_dir to parquet (under sf1 memory
-# pressure a bare .persist() partially re-derived through the Python
-# decode -- a parquet base makes eviction cost one columnar scan, not
-# a decode), then .persist() the parquet SCANS per session (the scan
-# + map decode still costs ~5-10 s/query at sf0.01; the in-memory
-# relation serves siblings in 1-3 s).  The decode path itself stays
-# independently certified by cdc_parse_binlog_binary/typed.
-_GUARD_FRAME_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+# MATERIALIZE the frames once per events table to parquet (under sf1
+# memory pressure a bare .persist() partially re-derived through the
+# Python decode -- a parquet base makes eviction cost one columnar
+# scan, not a decode), then .persist() the parquet SCANS per session
+# (the scan + map decode still costs ~5-10 s/query at sf0.01; the
+# in-memory relation serves siblings in 1-3 s).  The decode path itself
+# stays independently certified by cdc_parse_binlog_binary/typed.
 def _guard_payload_frames(spark, sf_dir):
     import os
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GUARD_FRAME_CACHE.get(key)
-    if hit is None:
-        d = _FIXTURE_DIRS.get(("guard_payloads", sf_dir))
-        if d is None:
-            bp, ap, key_tables = _build_guard_payloads(spark, sf_dir)
-            d = tempfile.mkdtemp(prefix="guard_payloads_")
-            bp.write.parquet(os.path.join(d, "bp"))
-            ap.write.parquet(os.path.join(d, "ap"))
-            key_tables.write.parquet(os.path.join(d, "kt"))
-            _FIXTURE_DIRS[("guard_payloads", sf_dir)] = d
-        hit = tuple(
-            spark.read.parquet(os.path.join(d, part)).persist()
-            for part in ("bp", "ap", "kt")
-        )
-        _GUARD_FRAME_CACHE[key] = hit
-    bp, ap, kt = hit
-    # hand out CHILD frames: operators scoped_cache their inputs, and
-    # releasing those scopes must not unpersist this cross-query cache
-    return bp.select("*"), ap.select("*"), kt.select("*")
+    def build(d):
+        bp, ap, key_tables = _build_guard_payloads(spark, sf_dir)
+        bp.write.parquet(os.path.join(d, "bp"))
+        ap.write.parquet(os.path.join(d, "ap"))
+        key_tables.write.parquet(os.path.join(d, "kt"))
+
+    d = materialized(spark, "guard_payloads", build, sf_dir)
+    # CHILD frames (persisted): operators scoped_cache their inputs,
+    # and releasing those scopes must not unpersist this shared cache
+    return tuple(
+        persisted(read_stored_parquet(spark, os.path.join(d, part)))
+        for part in ("bp", "ap", "kt")
+    )
 
 
 def _guard_frames(spark, sf_dir):

@@ -154,35 +154,17 @@ def _q_events_left_join_stream(spark, sf_dir):
 def _q_cdc_snapshot_incremental(spark, sf_dir):
     """Incremental snapshot maintenance in the driver contract: the
     events table is re-chunked into 4 parquet files (driver-side
-    scaffolding, memoized), replayed one file per micro-batch, and each
+    scaffolding, stored), replayed one file per micro-batch, and each
     batch folds into the versioned parquet state via foreachBatch
     (streaming/snapshot_sink.py).  Reading the final snapshot must
     equal batch apply_changes over all events -- the oracle is that SQL
     verbatim.  The chunking is arbitrary on purpose: the state merge is
     associative, so ANY batch boundary yields the same snapshot."""
-    global _STREAM_SINK_SEQ
-    import tempfile
-
-    from ..sources.tables import _EVENTS_SCHEMA, events_ts_column
     from ..streaming.snapshot_sink import maintain_snapshot, read_snapshot
 
     ensure_session_conf(spark)
-    chunks = _FIXTURE_DIRS.get(("events_chunks", sf_dir))
-    if chunks is None:
-        chunks = tempfile.mkdtemp(prefix="events_chunks_")
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(chunks)
-        _FIXTURE_DIRS[("events_chunks", sf_dir)] = chunks
-    _STREAM_SINK_SEQ += 1
-    work = tempfile.mkdtemp(prefix=f"snapshot_inc_{_STREAM_SINK_SEQ}_")
-    stream = (
-        spark.readStream.schema(
-            load_table(spark, sf_dir, "events").schema
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks)
-    )
+    work = scratch_dir("snapshot_inc_")
+    stream = _chunked_events_stream(spark, _events_chunk_dir(spark, sf_dir))
     q = maintain_snapshot(
         stream, f"{work}/state", f"{work}/ckpt"
     )
@@ -301,8 +283,6 @@ def _q_cdc_findings_stream(spark, sf_dir):
     end-of-stream BINLOG_ONLY check (module docstring explains why that
     one cannot stream)."""
     global _STREAM_SINK_SEQ
-    import tempfile
-
     from ..sources.jsonl import wrap_avro
     from ..streaming import stream_avro_jsonl, streaming_findings
 
@@ -312,11 +292,12 @@ def _q_cdc_findings_stream(spark, sf_dir):
     avro_flat = derive_avro_rows(ev).withColumn(
         "primary_keys", F.array(F.col("database"), F.col("table"))
     )
-    d = _FIXTURE_DIRS.get(("stream_avro", sf_dir))
-    if d is None:
-        d = tempfile.mkdtemp(prefix="cdc_stream_avro_")
-        wrap_avro(avro_flat).repartition(4).write.mode("overwrite").json(d)
-        _FIXTURE_DIRS[("stream_avro", sf_dir)] = d
+    d = materialized(
+        spark,
+        "stream_avro",
+        lambda d: wrap_avro(avro_flat).repartition(4).write.mode("overwrite").json(d),
+        sf_dir,
+    )
     stream = stream_avro_jsonl(spark, d, max_files_per_trigger=1)
     _STREAM_SINK_SEQ += 1
     name = f"cdc_findings_stream_sink_{_STREAM_SINK_SEQ}"
@@ -416,14 +397,12 @@ def _q_cdc_payload_findings_stream(spark, sf_dir):
     watermark can drop late-listed rows); event time is the source
     event's timestamp on both sides, which the oracle mirrors."""
     global _STREAM_SINK_SEQ
-    import tempfile
-
     from ..streaming.compare_stream import streaming_payload_findings
 
     ensure_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
-    d = _FIXTURE_DIRS.get(("stream_payload_findings", sf_dir))
-    if d is None:
+
+    def build(d):
         # binlog side: prepared row images (last-write-wins per key,
         # zero-pos and empty-file drops) + event-time ms
         b = derive_binlog_events_with_payload(ev).filter(
@@ -459,10 +438,10 @@ def _q_cdc_payload_findings_stream(spark, sf_dir):
                 F.col("__ats").alias("ts_ms"),
             )
         )
-        d = tempfile.mkdtemp(prefix="cdc_payload_findings_stream_")
         bframe.coalesce(1).write.mode("overwrite").json(d + "/b")
         aframe.coalesce(1).write.mode("overwrite").json(d + "/a")
-        _FIXTURE_DIRS[("stream_payload_findings", sf_dir)] = d
+
+    d = materialized(spark, "stream_payload_findings", build, sf_dir)
     schema = (
         "binlog_file string, binlog_position bigint, "
         "payload map<string,string>, ts_ms bigint"
@@ -535,21 +514,20 @@ def _q_cdc_payload_diff_stream(spark, sf_dir):
     stream-static payload diff.  The appended findings equal the batch
     operator's output, which is what the shared oracle states."""
     global _STREAM_SINK_SEQ
-    import tempfile
-
     from ..streaming.compare_stream import streaming_payload_diff
 
     ensure_session_conf(spark)
-    # binlog row images and the avro payload map from the per-session
-    # guard-frame cache: definitionally identical to the inline
-    # derivations this used to repeat, so the Python binary decode is
-    # paid once per session, not once per payload-tier query
+    # binlog row images and the avro payload map from the guard-frame
+    # store: definitionally identical to the inline derivations this
+    # used to repeat, so the Python binary decode is paid once per
+    # process, not once per payload-tier query
     bp, ap, _ = _guard_payload_frames(spark, sf_dir)
-    d = _FIXTURE_DIRS.get(("stream_avro_payload", sf_dir))
-    if d is None:
-        d = tempfile.mkdtemp(prefix="cdc_stream_avro_payload_")
-        ap.repartition(4).write.mode("overwrite").json(d)
-        _FIXTURE_DIRS[("stream_avro_payload", sf_dir)] = d
+    d = materialized(
+        spark,
+        "stream_avro_payload",
+        lambda d: ap.repartition(4).write.mode("overwrite").json(d),
+        sf_dir,
+    )
     ap_stream = (
         spark.readStream.schema(
             "binlog_file string, binlog_position bigint, payload map<string,string>"
@@ -596,26 +574,11 @@ def _q_ivm_stream(spark, sf_dir):
     batch folds signed retract/add contributions into a versioned view
     that is never rebuilt from the snapshot.  The final view must equal
     the full-feed recompute -- the cdc_ivm_refresh oracle verbatim."""
-    global _STREAM_SINK_SEQ
-    import tempfile
-
     from ..streaming.snapshot_sink import maintain_ivm, read_ivm_view
 
     ensure_session_conf(spark)
-    chunks = _FIXTURE_DIRS.get(("events_chunks", sf_dir))
-    if chunks is None:
-        chunks = tempfile.mkdtemp(prefix="events_chunks_")
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(chunks)
-        _FIXTURE_DIRS[("events_chunks", sf_dir)] = chunks
-    _STREAM_SINK_SEQ += 1
-    work = tempfile.mkdtemp(prefix=f"ivm_inc_{_STREAM_SINK_SEQ}_")
-    stream = (
-        spark.readStream.schema(load_table(spark, sf_dir, "events").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks)
-    )
+    work = scratch_dir("ivm_inc_")
+    stream = _chunked_events_stream(spark, _events_chunk_dir(spark, sf_dir))
     q = maintain_ivm(stream, f"{work}/state", f"{work}/ckpt")
     if not q.awaitTermination(300):
         q.stop()
@@ -722,17 +685,10 @@ def _q_cdc_parse_stream_pyds(spark, sf_dir):
     cdc_parse_binlog_text_pyds: three source implementations, one
     parser, one contract."""
     global _STREAM_SINK_SEQ
-    import tempfile
-
     ensure_session_conf(spark)
     from ..sources.pyds import register_binlog_text_source
 
-    d = _FIXTURE_DIRS.get(("parser_text", sf_dir))
-    if d is None:
-        lines = generate_parser_text_lines(load_table(spark, sf_dir, "events"))
-        d = tempfile.mkdtemp(prefix="pyds_parser_text_")
-        _fixture_write_distributed(lines, "binlog_file", d, _render_parser_text)
-        _FIXTURE_DIRS[("parser_text", sf_dir)] = d
+    d = _parser_text_fixture_dir(spark, sf_dir)
     register_binlog_text_source(spark)
     raw_stream = spark.readStream.format("binlogtext").option("path", d).load()
     _STREAM_SINK_SEQ += 1
@@ -875,27 +831,29 @@ _CHUNK_SCHEMA = (
 )
 
 
-def _events_chunk_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
+def _events_chunk_dir(spark: SparkSession, sf_dir: str) -> str:
     """Fixture scaffolding for the incremental-fold twins: the events
-    table split into ``n_chunks`` EVENT-TIME-ORDERED parquet files with
-    staggered mtimes, so a maxFilesPerTrigger=1 file stream replays
-    them as ordered micro-batches -- the arrival pattern a watermarked
+    table split into 4 EVENT-TIME-ORDERED parquet files with staggered
+    mtimes, so a maxFilesPerTrigger=1 file stream replays them as
+    ordered micro-batches -- the arrival pattern a watermarked
     production feed delivers.  The global ntile sort is fixture-only
     (driver-scale corpus); production chunking is the feed's own
-    arrival order.  Memoized per sf_dir."""
+    arrival order.  Stored once per events table."""
+    def build(d):
+        ev = load_table(spark, sf_dir, "events")
+        _write_chunks(ev, ("ts", "event_id"), d)
+
+    return materialized(spark, "events_chunks", build, sf_dir)
+
+
+def _write_chunks(df: DataFrame, order: tuple, d: str, n_chunks: int = 4) -> None:
+    """``df`` as ``n_chunks`` ``order``-ordered files ``chunk_NN.parquet``
+    in ``d``, with staggered mtimes in chunk order."""
     import glob
     import os
     import shutil
-    import tempfile
 
-    cached = _FIXTURE_DIRS.get(("events_chunks", sf_dir))
-    if cached is not None:
-        return cached
-    ev = load_table(spark, sf_dir, "events")
-    chunked = ev.withColumn(
-        "__c", F.ntile(n_chunks).over(Window.orderBy("ts", "event_id"))
-    )
-    d = tempfile.mkdtemp(prefix="events_chunks_")
+    chunked = df.withColumn("__c", F.ntile(n_chunks).over(Window.orderBy(*order)))
     base_mtime = 1_700_000_000
     # ONE partitioned write produces every chunk file (each __c value's
     # rows land whole in one task, so one file per chunk), instead of
@@ -904,7 +862,7 @@ def _events_chunk_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> st
     part_root = os.path.join(d, "__parts")
     (
         chunked.repartition(n_chunks, "__c")
-        .sortWithinPartitions("__c", "ts", "event_id")
+        .sortWithinPartitions("__c", *order)
         .write.partitionBy("__c")
         .parquet(part_root)
     )
@@ -914,8 +872,6 @@ def _events_chunk_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> st
         shutil.move(part, dst)
         os.utime(dst, (base_mtime + c, base_mtime + c))
     shutil.rmtree(part_root)
-    _FIXTURE_DIRS[("events_chunks", sf_dir)] = d
-    return d
 
 
 def _chunked_events_stream(spark: SparkSession, d: str) -> DataFrame:
@@ -931,43 +887,18 @@ _DOCS_CHUNK_SCHEMA = (
 )
 
 
-def _docs_chunk_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """The documents table split into ``n_chunks`` doc_id-ordered
-    parquet files with staggered mtimes -- the ingest-arrival replay
-    for the corpus-side incremental folds (same scaffolding as
-    _events_chunk_dir).  Memoized per sf_dir."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+def _docs_chunk_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The documents table split into 4 doc_id-ordered parquet files
+    with staggered mtimes -- the ingest-arrival replay for the
+    corpus-side incremental folds (same scaffolding as
+    _events_chunk_dir).  Stored once per documents table."""
+    def build(d):
+        docs = _docs(spark, sf_dir).select(
+            "doc_id", "text", "lang", "source", "n_chars"
+        )
+        _write_chunks(docs, ("doc_id",), d)
 
-    cached = _FIXTURE_DIRS.get(("docs_chunks", sf_dir))
-    if cached is not None:
-        return cached
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    chunked = docs.withColumn(
-        "__c", F.ntile(n_chunks).over(Window.orderBy("doc_id"))
-    )
-    d = tempfile.mkdtemp(prefix="docs_chunks_")
-    base_mtime = 1_700_000_000
-    # one partitioned write for all chunks (see _events_chunk_dir)
-    part_root = os.path.join(d, "__parts")
-    (
-        chunked.repartition(n_chunks, "__c")
-        .sortWithinPartitions("__c", "doc_id")
-        .write.partitionBy("__c")
-        .parquet(part_root)
-    )
-    for c in range(1, n_chunks + 1):
-        [part] = glob.glob(os.path.join(part_root, f"__c={c}", "part-*.parquet"))
-        dst = os.path.join(d, f"chunk_{c:02d}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (base_mtime + c, base_mtime + c))
-    shutil.rmtree(part_root)
-    _FIXTURE_DIRS[("docs_chunks", sf_dir)] = d
-    return d
+    return materialized(spark, "docs_chunks", build, sf_dir)
 
 
 def _chunked_docs_stream(spark: SparkSession, d: str) -> DataFrame:
@@ -981,7 +912,7 @@ def _chunked_docs_stream(spark: SparkSession, d: str) -> DataFrame:
 def _keyed(maintain, d: str):
     """Bind the replay source dir as the fold's per-batch slice-cache
     key (fold_sinks._batch_slice): sibling queries draining the same
-    chunk fixture derive each batch's slice once per session."""
+    chunk fixture derive each batch's slice once per process."""
 
     def maintain_keyed(stream, state_dir, ckpt):
         return maintain(stream, state_dir, ckpt, slice_key=d)
@@ -994,10 +925,8 @@ def _run_fold(spark, maintain, read_state, d: str, stream_fn=None) -> DataFrame:
     dirs per run (single-writer contract), availableNow drain under
     the state-partition scope, then read LATEST.  ``stream_fn``
     overrides the chunk-stream reader (default: the events schema)."""
-    import tempfile
-
-    state_dir = tempfile.mkdtemp(prefix="fold_state_")
-    ckpt = tempfile.mkdtemp(prefix="fold_ckpt_")
+    state_dir = scratch_dir("fold_state_")
+    ckpt = scratch_dir("fold_ckpt_")
     reader = stream_fn or _chunked_events_stream
     with _stream_state_partitions(spark):
         q = maintain(reader(spark, d), state_dir, ckpt)

@@ -43,48 +43,43 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..fixtures import derive_binlog_events
+from ..functions.caching import materialized, read_stored_parquet
 from .snapshot_sink import _latest_version
 
 
-# Per-session cache of MICRO-BATCH-DERIVED slices, keyed by the replay
+# Per-process store of MICRO-BATCH-DERIVED slices, keyed by the replay
 # source the caller names (``slice_key``, the chunk fixture dir) plus
 # the batch id and the deriving operator.  Several registered replay
 # queries drain the SAME chunked source through sibling folds
 # back-to-back, and each fold re-derived the identical per-batch slice
 # (the parsed DDL statements, the avro payload map, the banded
-# signatures) from the identical chunk file -- same session, same
-# batch, a pure function of the batch's rows (one mtime-ordered file
-# per trigger, so (source dir, batch_id) identifies the content).
-# Deriving it once per (session, source, batch) and serving the
-# materialized parquet to the sibling folds is fixture-derivation reuse
-# (the _guard_payload_frames discipline), NOT cross-run result caching:
-# the key carries the per-process applicationId and the paths live in
-# per-process tempdirs, so every bench/oracle invocation still computes
-# the slice from its inputs.  Side benefit (guide 3.3): the fold's
-# state merge then plans from a parquet leaf instead of re-carrying the
-# slice's full derivation lineage every batch.
-_BATCH_SLICE_CACHE: dict[tuple, str] = {}
-
-
+# signatures) from the identical chunk file -- a pure function of the
+# batch's rows (one mtime-ordered file per trigger, so (source dir,
+# batch_id) identifies the content).  Deriving it once per (source,
+# batch) and serving the materialized parquet to the sibling folds is
+# fixture-derivation reuse (functions/caching.materialized), NOT
+# cross-run result caching: the store is per process and removed at
+# exit, and a source that is not a store directory is keyed by its
+# files' content.  Side benefit (guide 3.3): the fold's state merge
+# then plans from a parquet leaf instead of re-carrying the slice's
+# full derivation lineage every batch.
 def _batch_slice(
     spark: SparkSession, kind: str, slice_key, batch_id: int, build
 ) -> DataFrame:
-    """``build()`` materialized once per (session, kind, source, batch).
+    """``build()`` materialized once per (kind, source, batch).
 
     ``slice_key=None`` (the default everywhere) keeps the direct
     uncached, unmaterialized derivation -- non-replay sources and
     in-memory test frames keep their old behavior exactly."""
-    import tempfile
-
     if slice_key is None:
         return build()
-    key = (spark.sparkContext.applicationId, kind, slice_key, batch_id)
-    d = _BATCH_SLICE_CACHE.get(key)
-    if d is None:
-        d = tempfile.mkdtemp(prefix=f"batch_slice_{kind}_")
-        build().write.parquet(os.path.join(d, "data"))
-        _BATCH_SLICE_CACHE[key] = d
-    return spark.read.parquet(os.path.join(d, "data"))
+    d = materialized(
+        spark,
+        f"batch_slice_{kind}_{batch_id}",
+        lambda d: build().write.parquet(os.path.join(d, "data")),
+        slice_key,
+    )
+    return read_stored_parquet(spark, os.path.join(d, "data"))
 
 
 def _swing_pointer(state_dir: str, batch_id: int) -> None:

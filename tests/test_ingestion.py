@@ -474,15 +474,14 @@ class TestBinlogBinaryCodec:
         spliced = blob[:fde_end] + unknown + blob[fde_end:]
         assert len(list(decode_binlog_bytes("f", spliced))) == len(self.EVS)
 
-    def test_distributed_scan_matches_local_decode(self, spark):
+    def test_distributed_scan_matches_local_decode(self, spark, tmp_path):
         import os
-        import tempfile
 
         from binlog_avro_comparator_spark.sources.binlog_binary import (
             decode_binlog_bytes, encode_binlog_file, read_binlog_binary_dir)
 
         blob = encode_binlog_file(self.EVS)
-        d = tempfile.mkdtemp(prefix="binlog_bin_test_")
+        d = str(tmp_path)
         for name in ("mysql-bin.000001", "mysql-bin.000002"):
             with open(os.path.join(d, name), "wb") as f:
                 f.write(blob)

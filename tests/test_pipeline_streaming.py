@@ -95,6 +95,30 @@ def test_run_comparison_latency_profile(spark, io_dirs):
     assert r.p99_ms == 20 + 0.99 * (500 - 20)  # R-7 interpolation
 
 
+def test_run_comparison_rereads_rewritten_inputs(spark, tmp_path):
+    """run_comparison caches frames over its inputs, and Spark matches
+    cached plans by path: a second run on the same paths with new bytes
+    must count the new bytes, not serve the first run's cache."""
+    text = tmp_path / "binlog_text" / "mysql-bin.000001"
+    avro = tmp_path / "avro_rows.json"
+    text.parent.mkdir()
+
+    def run(binlog_text, recs):
+        text.write_text(binlog_text)
+        avro.write_text("".join(json.dumps(r) + "\n" for r in recs))
+        res = run_comparison(
+            spark, binlog_text_dir=str(text.parent), avro_jsonl=str(avro)
+        )
+        s = res.summary.collect()[0]
+        return (s.total_avro_records, s.matched, s.ts_mismatches, s.avro_only, s.binlog_only)
+
+    recs = [_avro_rec(100, BASE_MS + 20), _avro_rec(200, BASE_MS + 5500), _avro_rec(999, BASE_MS)]
+    assert run(BINLOG_TEXT, recs) == (3, 2, 1, 1, 0)
+    third = "--\n=== WriteRowsEventV2 ===\nDate: 2025-06-01 12:00:09\nLog position: 300\nSchema: shop\nTable: orders\n"
+    recs += [_avro_rec(300, BASE_MS + 9000), _avro_rec(998, BASE_MS)]
+    assert run(BINLOG_TEXT + third, recs) == (5, 3, 1, 2, 0)
+
+
 def test_run_comparison_requires_one_binlog_input(spark, io_dirs):
     with pytest.raises(ValueError):
         run_comparison(spark, avro_jsonl="x")

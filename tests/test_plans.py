@@ -995,14 +995,13 @@ def test_shingle_novelty_aggregates_and_single_tag_join(spark):
     assert n_joins == 1
 
 
-def test_payload_diff_stream_is_stateless(spark):
+def test_payload_diff_stream_is_stateless(spark, tmp_path):
     """The stream-static payload diff must plan ZERO stateful
     operators (no state store, no watermark): each micro-batch is a
     broadcast lookup against the closed binlog image side plus a
     per-row column-union explode.  Same probe as the enrich test:
     drained progress reports stateOperators == []."""
     import json as _json
-    import tempfile
 
     from pyspark.sql import functions as F_
 
@@ -1018,7 +1017,7 @@ def test_payload_diff_stream_is_stateless(spark):
         [("f1", 100, {"a": "1", "b": "y"}), ("f1", 200, {"a": "2", "c": "z"})],
         "binlog_file string, binlog_position long, payload map<string,string>",
     )
-    d = tempfile.mkdtemp(prefix="payload_stream_plan_")
+    d = str(tmp_path)
     ap.repartition(2).write.mode("overwrite").json(d)
     stream = (
         spark.readStream.schema(
@@ -1301,16 +1300,16 @@ def test_closure_has_no_recursion_and_caps_components(spark):
     assert "BroadcastExchange" in plan or "broadcast" in plan.lower()
 
 
-def test_rotate_chain_single_file_cardinality_window(spark):
+def test_rotate_chain_single_file_cardinality_window(spark, tmp_path):
     """The rotate audit is ONE window over the per-file frame: a single
     Window node, no join, and the binaryFile scan prunes to
     (path, content)."""
     from binlog_avro_comparator_spark.operators.compare import rotate_chain_audit
     from binlog_avro_comparator_spark.sources.binlog_binary import (
         encode_binlog_file, read_binlog_rotate_dir)
-    import tempfile, os
+    import os
 
-    d = tempfile.mkdtemp(prefix="rotate_plan_")
+    d = str(tmp_path)
     with open(os.path.join(d, "mysql-bin.000001"), "wb") as f:
         f.write(encode_binlog_file([], next_file="mysql-bin.000002"))
     with open(os.path.join(d, "mysql-bin.000002"), "wb") as f:
